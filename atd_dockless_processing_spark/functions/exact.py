@@ -21,9 +21,9 @@ long sum wraps silently; DuckDB promotes to HUGEINT) — ~9e16 dollars
 per group in cents, 4 orders of magnitude above the 100 TB posture.
 Past it, lift into decimal(38,0) before summing.
 
-Used by the layout-dispatched keys (join_inner, join_multiway_5,
-evt_tumbling_hour), where the bucketed/staged physical plan IS live
-during hash-gated driver sweeps since the r13 DDL re-attach.
+Used by join_inner, join_multiway_5 and evt_tumbling_hour, whose
+hashed sums must not depend on the physical plan (join strategy,
+scan partitioning).
 
 Scope note: this helper is the single-aggregate form of the
 discipline. The PAIRS-FIRST/groupingSets keys (aggregates.py —

@@ -27,8 +27,6 @@ rest of the calendar derivation surface in ``functions/scalars.py``.)
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -277,18 +275,21 @@ def agg_corr_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal(17,0) → rows/group < ~3.9e8; Σuy ≤ rows·1.05e9 vs
     decimal(18,0) → rows/group < ~9.5e8; Σux vs decimal(15,0) →
     rows/group < ~2e9. Binding bound: the Σlo decimal(18,0) cast at
-    **rows/group < ~2.3e8** — 11× above ×100 (the suy/sux casts were
-    widened to 18,0/15,0 in r15 per ADVICE so the long sums, not
-    these casts, bind; the hi casts cannot widen past 17,0 without
-    pushing the reconstruction over precision 38). PAST the bound
-    this form is wrong-by-construction: Spark 4.1 ANSI throws on the
-    long-sum wrap (and with ANSI off it would silently corrupt), so
-    deployments at the stated 100 TB design point (~1e11 rows/flag)
-    must flip ``SPARK_GRAFT_CORR_COV_WIDE=1``, which swaps in the
-    decimal power-sum twin — identical output (equality-pinned), no
-    row bound, ~4.7× slower per ×100 A/B. The local default stays
-    the long-unit form (driver bench comparable; sf0.1/×100 are 11×+
-    under the bound).
+    **rows/group < ~2.3e8** — 11× above ×100. r15 widened the sux/suy
+    casts to (15,0)/(18,0) so that they bind past the Σlo bound, not
+    past their own long-sum wraps: the suy cast (~9.5e8) still binds
+    before the suy long sum wraps (~8.8e9). The hi casts cannot widen
+    past 17,0 without pushing the reconstruction over precision 38.
+    PAST the bound the long-unit form is wrong-by-construction: Spark
+    4.1 ANSI throws on the wrap (and with ANSI off it would silently
+    corrupt). So the key dispatches on the lineitem row count read
+    from parquet footers (``tables.parquet_nrows``, no Spark job): at
+    or above ``_CORR_COV_UNIT_MAX_ROWS``, or when the count is
+    unknown, it runs ``_corr_cov_decimal_twin`` — identical output
+    (equality-pinned), no row bound, ~4.7× slower per ×100 A/B. The
+    table's total row count bounds every group's count, so the check
+    is conservative; sf0.1 and ×100 are 11×+ under it and run the
+    long-unit form (``_corr_cov_long_units``).
 
     Isolated-process ×100 A/B (fresh process per form, 5 hot runs, 2
     epochs): units 0.890/0.810 s vs decimal 3.873/4.163 s vs DuckDB
@@ -296,8 +297,22 @@ def agg_corr_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.61×). The decimal power-sum form stays as
     ``_corr_cov_decimal_twin``, equality-pinned (driver corpus +
     synthesized edge corpus)."""
-    if os.environ.get("SPARK_GRAFT_CORR_COV_WIDE") == "1":
+    from ..tables import parquet_nrows
+
+    nrows = parquet_nrows(sf_dir, "lineitem")
+    if nrows is None or nrows >= _CORR_COV_UNIT_MAX_ROWS:
         return _corr_cov_decimal_twin(spark, sf_dir)
+    return _corr_cov_long_units(spark, sf_dir)
+
+
+# Σlo of a group is < rows·2^32 and is cast to decimal(18,0): the
+# long-unit form is exact only below this many rows per group.
+_CORR_COV_UNIT_MAX_ROWS = 10**18 // 2**32
+
+
+def _corr_cov_long_units(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """agg_corr_cov's long-unit power-sum form (see its docstring for
+    the arithmetic and the row bound it is exact under)."""
     li = load(spark, sf_dir, "lineitem")
     ux = F.floor(F.col("l_quantity") * 10000 + F.lit(0.5)).cast("long")
     uy = F.floor(F.col("l_extendedprice") * 10000 + F.lit(0.5)).cast("long")

@@ -898,12 +898,11 @@ def dq_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _CMS_D = 4  # hash rows
-_CMS_W = 1024  # columns per row
 _CMS_PROBES = 8  # probe keys 0..7
 
 # Column index of key {k} in hash row {d}: 12 bits of md5 ("row:key")
-# folded to the width. Integer-exact on both engines; only the
-# hex->int spelling differs (conv vs '0x' cast), values identical.
+# folded to the 1024-column width. Integer-exact on both engines; only
+# the hex->int spelling differs (conv vs '0x' cast), values identical.
 _CMS_COL_SPARK = (
     "(CAST(conv(substr(md5(CAST({d} AS STRING) || ':' || "
     "CAST({k} AS STRING)), 1, 3), 16, 10) AS INT) % 1024)"

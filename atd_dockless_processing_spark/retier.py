@@ -63,25 +63,15 @@ EVIDENCE_INVALIDATED: dict[str, int] = {
     # r11: map->dense-array bitmap + xxhash64 positions (34x -> 4.7x
     # at x100; the map element_at linear scan was the scale bug)
     "join_bloom_prefilter": 11,
-    # r12 (VERDICT r11 item 2): bucketed-custkey layout dispatch added
-    # to all three, and join_cross_small's spine now pre-aggregates to
-    # (c_nationkey, o_orderstatus) before the dim joins — registered
-    # plans changed, evidence re-earned
-    # r13 (VERDICT r12 item 2; supersedes these keys' r12 entries):
-    # bucketed layouts now DDL-re-attach in fresh sessions, so the
-    # driver-real sweep executes the BUCKETED physical plans for the
-    # four layout-dispatched join keys for the first time; join_inner
-    # and join_multiway_5 additionally changed their aggregate
-    # expressions to exact integer-unit sums (cents / e4 — r12 ADVICE
-    # #1) in both engines. Evidence re-earned on the new plans.
-    "join_inner": 13,
-    "join_anti": 13,
-    "join_cross_small": 13,
-    "join_multiway_5": 13,
-    # r13: µs-staged layout pre-built at the driver sf_dir (the scan
-    # dispatches to it in driver-real sessions for the first time) +
-    # exact-cents sum_value in both engines
-    "evt_tumbling_hour": 13,
+    # r16 (supersedes these keys' r13 entries, whose CORRECTNESS rows
+    # were earned on the bucketed / µs-staged layout plans): the layout
+    # dispatch is deleted, so each key always runs its one ad-hoc plan.
+    # Evidence re-earned on that plan.
+    "join_inner": 16,
+    "join_anti": 16,
+    "join_cross_small": 16,
+    "join_multiway_5": 16,
+    "evt_tumbling_hour": 16,
     # r13 (VERDICT r12 item 4): registered band shape flipped to the
     # production 8x2 (sublinear-in-docs, measured through x100) for
     # the whole shared-candidate-plan family; 16x1 twin test-pinned

@@ -254,8 +254,6 @@ def snk_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # sanitize EVERY non-identifier char (not just "/" and ".") — a
     # hyphenated corpus path made saveAsTable throw ParseException
-    # (the r13 _BucketedLayout.names() fix, applied here too; names
-    # are unchanged for the historical dirs)
     sftag = _re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.strip("/"))
     base = scratch_dir("snk_bucketed", sf_dir.strip("/").replace("/", "_"))
     o_tbl, c_tbl = f"bkt_orders_{sftag}", f"bkt_customer_{sftag}"

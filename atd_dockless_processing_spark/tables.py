@@ -26,9 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimension tables that should always be broadcast in joins.
-BROADCAST_DIMS = {"region", "nation", "supplier"}
-
 REPO_ROOT = Path(__file__).resolve().parent.parent
 SCRATCH = REPO_ROOT / ".scratch"
 
@@ -47,13 +44,10 @@ def set_table_provider(provider) -> None:
 
 
 def provider_active() -> bool:
-    """True while a table provider is installed. Layout machinery
-    (ensure_* builders AND their availability/dispatch probes) must
-    treat this as 'the logical tables are NOT the on-disk files right
-    now': a layout must neither be BUILT from provider rows under the
-    disk source's signature nor SERVED in place of provider rows
-    (r10 review findings #4/#1 — one shared predicate so the rule
-    lands everywhere at once, the stage_scratch argument)."""
+    """True while a table provider is installed: the logical tables
+    are NOT the on-disk files right now, so ``stage_scratch`` must not
+    sign provider-derived staging with the disk source's signature
+    (r10 review findings #4/#1)."""
     return _PROVIDER is not None
 
 
@@ -135,18 +129,16 @@ def scratch_dir(*parts: str) -> str:
 
 
 def source_signature(path: str) -> str:
-    """Freshness signature of a source parquet path, shared by every
-    staleness marker in the package (stage_scratch, the Q5 bucketed
-    layout). For a DIRECTORY the signature enumerates every contained
-    file's (name, mtime_ns, size) — an in-place rewrite of one part
-    file does not bump the directory's own mtime/size, so a dir-level
-    stat would silently serve stale staged data (r8 ADVICE #1, r9
-    review finding #1; mirrors ``parquet_nrows``'s isdir branch). An
-    unstatable path (moved testdata, provider-served sf_dir) yields a
-    NONCE signature — never equal to any stored marker, even one
-    written while the source was equally unstatable — so callers
-    rebuild (cheap stagings) or decline to install (expensive
-    layouts, via ``signature_unavailable``) instead of trusting a
+    """Freshness signature of a source parquet path: the staleness
+    marker of ``stage_scratch``. For a DIRECTORY the signature
+    enumerates every contained file's (name, mtime_ns, size) — an
+    in-place rewrite of one part file does not bump the directory's
+    own mtime/size, so a dir-level stat would silently serve stale
+    staged data (r8 ADVICE #1, r9 review finding #1; mirrors
+    ``parquet_nrows``'s isdir branch). An unstatable path (moved
+    testdata, provider-served sf_dir) yields a NONCE signature — never
+    equal to any stored marker, even one written while the source was
+    equally unstatable — so callers rebuild instead of trusting a
     marker they cannot re-verify."""
     import os
 
@@ -195,13 +187,6 @@ def source_signature(path: str) -> str:
         return "UNAVAILABLE:" + os.urandom(8).hex()
 
 
-def signature_unavailable(sig: str) -> bool:
-    """True when ``source_signature`` could not stat the source —
-    freshness is untrackable, so expensive cached layouts must not be
-    (re)installed against it."""
-    return "UNAVAILABLE:" in sig
-
-
 def stage_scratch(name: str, sf_dir: str, src_table: str, build_fn) -> str:
     """Source-freshness-markered scratch staging, shared by every
     operator that derives a staged input dataset from a driver table
@@ -229,9 +214,7 @@ def stage_scratch(name: str, sf_dir: str, src_table: str, build_fn) -> str:
     # While a table provider is installed, build_fn derives the staging
     # from PROVIDER rows, not the on-disk source — reusing or signing it
     # with the disk source's signature would keep serving provider rows
-    # after the provider is gone (r10 ADVICE #1: the same hazard
-    # provider_active() guards in ensure_tumbling_us_layout /
-    # ensure_q5_bucketed_layout, applied to the shared helper itself).
+    # after the provider is gone (r10 ADVICE #1).
     # Degrade to rebuild-per-call with no marker, and drop any marker a
     # prior non-provider run left so the next plain run re-stages too.
     if provider_active():

@@ -210,8 +210,7 @@ def main() -> None:
 
     # r10: cache the three fact tables HASH-PARTITIONED on the key
     # their dominant bench consumer first exchanges on — the in-memory
-    # analogue of bucketing (same one-time-layout economics as the Q5
-    # bucketed tables). The cached partitioning flows through the
+    # analogue of bucketing. The cached partitioning flows through the
     # broadcast joins (BHJ output-partitioning expansion maps
     # l_orderkey -> o_orderkey), so q3's agg, window_rank's window and
     # sessionize's window+agg all plan EXCHANGE-FREE; consumers that

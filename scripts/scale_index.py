@@ -87,7 +87,7 @@ POINTERS = {
     "stm_sketch_hll_merge": "register state merged across forced micro-batches (r6b); bounded sketch state — the stateful-agg scale shape",
     # remaining stm_* keys: availableNow micro-batch semantics; the
     # per-batch plan equals the measured batch twin named per row
-    "stm_tumbling_availablenow": "batch twin evt_tumbling_hour (r10 registered adaptive dispatch: 1.28x staged / 1.73x ad-hoc at x100; encoding decomposition in BASELINE µs-staged table)",
+    "stm_tumbling_availablenow": "batch twin evt_tumbling_hour (1.73x at x100 on its one registered plan, the ad-hoc events scan; encoding decomposition in BASELINE µs-staged table)",
     "stm_sliding_watermark": "batch twin evt_sliding_window (2.02x x100, CLOSED AS CONSTANT-FACTOR - two-level pre-agg rewrite measured a wash r7)",
     "stm_watermark_dedup": "batch twin llm_dedup_exact-shape dedup (1.75x x100)",
     "stm_session_window": "batch twin evt_session_window_native (0.47x x100)",

@@ -2773,57 +2773,6 @@ def test_rfm_gather_and_chained_forms_identical(spark, sf_dir):
         assert a == b and a, (d, a[:3], b[:3])
 
 
-def test_q5_bucketed_layout_exchange_free_and_identical(spark, sf_dir):
-    """The layout-aware Q5 dispatch (r8): once the bucketed-orderkey
-    layout exists, 'auto' must pick it, the orderkey fact-fact join
-    must consume the bucketed scans with NO Exchange on either side,
-    and the result must equal the ad-hoc plan row-for-row.
-
-    r13: cleanup added (the CK tests' try/finally discipline) — a
-    leaked layout was inert while availability was catalog-scoped,
-    but with DDL re-attach it would silently flip every later
-    sf0.001 'auto' plan to bucketed-4, making suite plans order-
-    dependent (values stay identical by construction, but plan
-    assertions must be deterministic)."""
-    import re as _re
-    import shutil
-    from pathlib import Path
-
-    from atd_dockless_processing_spark.operators.joins import (
-        _Q5_LAYOUT,
-        _q5_layout_available,
-        ensure_q5_bucketed_layout,
-        multiway5_plan,
-    )
-
-    names, base = _Q5_LAYOUT.names(sf_dir, 4)
-    ensure_q5_bucketed_layout(spark, sf_dir, buckets=4)
-    try:
-        assert _q5_layout_available(spark, sf_dir, buckets=4)
-        # a DIFFERENT bucket count must not see this layout (identity
-        # includes the count), and a fresh marker must be required
-        assert not _q5_layout_available(spark, sf_dir, buckets=16)
-
-        adhoc = sorted(map(tuple, multiway5_plan(spark, sf_dir, "adhoc").collect()))
-        auto = multiway5_plan(spark, sf_dir, buckets=4)  # must dispatch to bucketed
-        plan = auto._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan[:2000]
-        assert not _re.search(r"Exchange hashpartitioning\(l_orderkey", plan), plan[:3000]
-        assert not _re.search(r"Exchange hashpartitioning\(o_orderkey", plan), plan[:3000]
-        # r8 ADVICE #4: the merge hint on the bucketed orders scan must
-        # bias ONLY the nearest join above it (the orderkey SMJ). At small
-        # SF the later orders⋈customer join must keep Catalyst's broadcast
-        # choice — a Spark upgrade that widens hint scoping trips here.
-        assert _re.search(r"BroadcastHashJoin \[o_custkey", plan), plan[:3000]
-        got = sorted(map(tuple, auto.collect()))
-        assert got == adhoc and got, (got[:3], adhoc[:3])
-    finally:
-        for n in names:
-            spark.sql(f"DROP TABLE IF EXISTS {n}")
-        shutil.rmtree(base, ignore_errors=True)
-        assert not Path(base).exists()
-
-
 def test_ivf_scaled_plan_recall_and_determinism(spark):
     """The sized-quantizer IVF (r8): on the sf0.01 corpus the
     nlist=4, nprobe=1 plan must (a) be deterministic across runs,
@@ -2946,31 +2895,6 @@ def test_python_stream_source_replay_equals_read():
         off = off2
     replay = list(r.readBetweenOffsets(r.initialOffset(), off))
     assert replay == seq and len(seq) == 5000
-
-
-def test_q5_layout_invalidated_by_stale_source_marker(spark, sf_dir):
-    """A layout whose freshness marker no longer matches the source
-    parquet signature must be treated as ABSENT (auto falls back to
-    ad-hoc) — the regenerated-corpus staleness guard."""
-    from pathlib import Path
-
-    from atd_dockless_processing_spark.operators.joins import (
-        _q5_bucket_tables,
-        _q5_layout_available,
-        ensure_q5_bucketed_layout,
-    )
-
-    ensure_q5_bucketed_layout(spark, sf_dir, buckets=4)
-    assert _q5_layout_available(spark, sf_dir, buckets=4)
-    li_tbl, _, base = _q5_bucket_tables(sf_dir, 4)
-    marker = Path(base, f".{li_tbl}.src_sig")
-    good = marker.read_text()
-    try:
-        marker.write_text("stale:0:0;stale:0:0")
-        assert not _q5_layout_available(spark, sf_dir, buckets=4)
-    finally:
-        marker.write_text(good)
-    assert _q5_layout_available(spark, sf_dir, buckets=4)
 
 
 def test_declarative_pipeline_local_executor(spark, sf_dir, tmp_path):
@@ -3668,74 +3592,6 @@ def test_drain_to_target_fails_fast_on_clean_termination(spark):
     _drain_to_target(spark, _DoneQuery(), name, target=3, timeout_s=60.0)
 
 
-def test_tumbling_us_layout_dispatch_and_identical(spark, sf_dir, tmp_path):
-    """The layout-aware tumbling dispatch (r10, VERDICT r9 item 2):
-    once the µs-staged narrow layout exists, 'auto' must pick it (scan
-    reads the scratch path, physical ts is TIMESTAMP_MICROS), the
-    result must equal the ad-hoc plan row-for-row, and a source
-    regeneration must invalidate the layout."""
-    import glob
-    import os
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    from atd_dockless_processing_spark.operators.events import (
-        _tumbling_us_available,
-        _tumbling_us_paths,
-        ensure_tumbling_us_layout,
-        tumbling_hour_plan,
-    )
-
-    tmp_sf = str(tmp_path / "sf")
-    try:
-        staged = ensure_tumbling_us_layout(spark, sf_dir)
-        assert _tumbling_us_available(sf_dir)
-        part = glob.glob(f"{staged}/*.parquet")[0]
-        assert str(pq.ParquetFile(part).schema_arrow.field("ts").type) == "timestamp[us, tz=UTC]"
-        assert pq.ParquetFile(part).schema_arrow.names == ["ts", "event_type", "value"]
-
-        adhoc = sorted(map(tuple, tumbling_hour_plan(spark, sf_dir, "adhoc").collect()))
-        auto = tumbling_hour_plan(spark, sf_dir)  # must dispatch to staged
-        plan = auto._jdf.queryExecution().executedPlan().toString()
-        assert "events_us" in plan, plan[:2000]
-        got = sorted(map(tuple, auto.collect()))
-        assert got == adhoc and got, (got[:3], adhoc[:3])
-
-        # registered key == plan dispatch (the @query wrapper routes here)
-        from atd_dockless_processing_spark import QUERIES
-
-        reg = sorted(map(tuple, QUERIES["evt_tumbling_hour"](spark, sf_dir).collect()))
-        assert reg == adhoc
-
-        # freshness: against a THROWAWAY copy of the source (testdata
-        # is read-only), build a layout, then bump the copy's mtime —
-        # the layout must stop dispatching, 'auto' falls back to ad-hoc
-        os.makedirs(tmp_sf)
-        if os.path.isdir(f"{sf_dir}/events.parquet"):
-            shutil.copytree(f"{sf_dir}/events.parquet", f"{tmp_sf}/events.parquet")
-        else:
-            shutil.copy2(f"{sf_dir}/events.parquet", f"{tmp_sf}/events.parquet")
-        ensure_tumbling_us_layout(spark, tmp_sf)
-        assert _tumbling_us_available(tmp_sf)
-        src = f"{tmp_sf}/events.parquet"
-        target = os.path.join(src, sorted(os.listdir(src))[0]) if os.path.isdir(src) else src
-        st = os.stat(target)
-        os.utime(target, ns=(st.st_mtime_ns + 10**9, st.st_mtime_ns + 10**9))
-        assert not _tumbling_us_available(tmp_sf)
-        fallback = tumbling_hour_plan(spark, tmp_sf)
-        assert "events_us" not in fallback._jdf.queryExecution().executedPlan().toString()
-    finally:
-        # remove BOTH layouts wholesale (parquet dir + marker), even on
-        # assertion failure — a leaked layout would silently flip every
-        # later evt_tumbling_hour plan in this repo checkout (r10
-        # review finding #1)
-        for sf in (sf_dir, tmp_sf):
-            shutil.rmtree(
-                os.path.dirname(_tumbling_us_paths(sf)[0]), ignore_errors=True
-            )
-
-
 def test_tws_bucketed_totals_equals_registered(spark, sf_dir):
     """The coarse-key TWS form (r10 A/B: 8.8x shrink of the per-user
     state-server constant at x100) must produce the registered
@@ -4066,8 +3922,7 @@ def test_stage_scratch_never_persists_provider_staging(spark, sf_dir):
     derives staging from PROVIDER rows — the helper must neither sign
     that staging with the on-disk source's signature nor reuse an
     existing marker, or provider rows keep being served after the
-    provider is gone (r10 ADVICE #1: the ensure_*-layout guard applied
-    to the shared helper itself)."""
+    provider is gone (r10 ADVICE #1)."""
     import os
     import shutil
 
@@ -4282,225 +4137,6 @@ def test_bloom_prefilter_survives_key_width_divergence(spark, sf_dir):
     assert narrowed == base and base
 
 
-def test_custkey_bucketed_layout_dispatch_identity_and_staleness(spark, sf_dir):
-    """r12 bucketed-custkey layout (VERDICT r11 item 2): with the
-    layout present the three registered custkey shapes must dispatch
-    to exchange-free sort-merge plans off the bucketed scans and
-    return the same values as the ad-hoc forms; a stale freshness
-    marker must make the layout invisible (auto falls back to ad-hoc);
-    the layout is dropped in finally so no later test inherits it."""
-    import re as _re
-    import shutil
-    from pathlib import Path
-
-    from atd_dockless_processing_spark.operators.joins import (
-        _ck_bucket_tables,
-        _ck_layout_available,
-        custkey_anti_plan,
-        custkey_cross_plan,
-        custkey_inner_plan,
-        ensure_custkey_bucketed_layout,
-    )
-
-    o_tbl, c_tbl, base = _ck_bucket_tables(sf_dir, 4)
-    ensure_custkey_bucketed_layout(spark, sf_dir, buckets=4)
-    try:
-        assert _ck_layout_available(spark, sf_dir, buckets=4)
-        # bucket count is part of the identity
-        assert not _ck_layout_available(spark, sf_dir, buckets=16)
-
-        # ---- join_anti: ZERO-exchange sort-merge anti ----
-        anti_auto = custkey_anti_plan(spark, sf_dir, buckets=4)
-        plan = anti_auto._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan[:2000]
-        assert "Exchange hashpartitioning" not in plan, plan[:3000]
-        adhoc = sorted(
-            map(tuple, custkey_anti_plan(spark, sf_dir, "adhoc").collect())
-        )
-        assert sorted(map(tuple, anti_auto.collect())) == adhoc
-
-        # ---- join_inner: custkey join exchange-free, agg exchange only
-        inner_auto = custkey_inner_plan(spark, sf_dir, buckets=4)
-        plan = inner_auto._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan[:2000]
-        assert not _re.search(r"Exchange hashpartitioning\(o_custkey", plan)
-        assert not _re.search(r"Exchange hashpartitioning\(c_custkey", plan)
-        got = {
-            r["c_mktsegment"]: r
-            for r in inner_auto.collect()
-        }
-        want = {
-            r["c_mktsegment"]: r
-            for r in custkey_inner_plan(spark, sf_dir, "adhoc").collect()
-        }
-        assert set(got) == set(want) and got
-        for seg in want:
-            assert got[seg]["n_orders"] == want[seg]["n_orders"]
-            # r13: the sum is EXACT integer cents (floor(x*100+0.5)
-            # lift) precisely so that SMJ-vs-SHJ aggregation order
-            # cannot move it — bucketed and ad-hoc must now agree
-            # BIT-FOR-BIT at any SF (r12 ADVICE #1; required because
-            # re-attached layouts are live during hash-gated sweeps)
-            assert got[seg]["sum_price"] == want[seg]["sum_price"], seg
-
-        # ---- join_cross_small: exact (integer counts) ----
-        cross_auto = custkey_cross_plan(spark, sf_dir, buckets=4)
-        plan = cross_auto._jdf.queryExecution().executedPlan().toString()
-        assert not _re.search(r"Exchange hashpartitioning\(o_custkey", plan)
-        assert not _re.search(r"Exchange hashpartitioning\(c_custkey", plan)
-        assert sorted(map(tuple, cross_auto.collect())) == sorted(
-            map(tuple, custkey_cross_plan(spark, sf_dir, "adhoc").collect())
-        )
-
-        # ---- staleness: a mismatching marker hides the layout ----
-        marker = Path(base, f".{o_tbl}.src_sig")
-        good = marker.read_text()
-        try:
-            marker.write_text("stale:0:0;stale:0:0")
-            assert not _ck_layout_available(spark, sf_dir, buckets=4)
-            # auto now plans off the SOURCE parquet, not the layout
-            p = (
-                custkey_anti_plan(spark, sf_dir, buckets=4)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            assert o_tbl not in p, p[:2000]
-        finally:
-            marker.write_text(good)
-        assert _ck_layout_available(spark, sf_dir, buckets=4)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {o_tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {c_tbl}")
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_bucketed_layout_reattaches_across_sessions(spark, sf_dir):
-    """r13 (VERDICT r12 item 2): bucketed external tables live in the
-    session-scoped in-memory catalog, but the data files + freshness
-    marker persist — a fresh session must DDL-re-attach a disk-valid
-    layout (CREATE TABLE over the existing files, no data rewrite)
-    instead of falling back to the ad-hoc plan forever. Simulated
-    fresh catalog = DROP TABLE both entries (exactly what a session
-    boundary loses); then the availability probe must restore them
-    and the dispatched plan must be the zero-exchange SMJ with values
-    identical to ad-hoc. Guards re-checked post-re-attach: foreign
-    bucket count, stale marker (no catalog resurrection from a stale
-    layout), active table provider."""
-    import shutil
-    from pathlib import Path
-
-    from atd_dockless_processing_spark import tables
-    from atd_dockless_processing_spark.operators.joins import (
-        _ck_bucket_tables,
-        _ck_layout_available,
-        custkey_anti_plan,
-        custkey_inner_plan,
-        ensure_custkey_bucketed_layout,
-    )
-
-    o_tbl, c_tbl, base = _ck_bucket_tables(sf_dir, 4)
-    ensure_custkey_bucketed_layout(spark, sf_dir, buckets=4)
-    try:
-        adhoc_inner = sorted(
-            map(tuple, custkey_inner_plan(spark, sf_dir, "adhoc").collect())
-        )
-
-        # ---- the session boundary: catalog entries vanish ----
-        spark.sql(f"DROP TABLE {o_tbl}")
-        spark.sql(f"DROP TABLE {c_tbl}")
-        assert not spark.catalog.tableExists(o_tbl)
-
-        # a foreign bucket count must NOT re-attach this layout
-        assert not _ck_layout_available(spark, sf_dir, buckets=16)
-        assert not spark.catalog.tableExists(o_tbl)
-
-        # provider active: probe declines BEFORE any DDL
-        tables.set_table_provider(lambda s, d, n: None)
-        try:
-            assert not _ck_layout_available(spark, sf_dir, buckets=4)
-        finally:
-            tables.set_table_provider(None)
-        assert not spark.catalog.tableExists(o_tbl)
-
-        # stale marker: no resurrection from a stale layout
-        marker = Path(base, f".{o_tbl}.src_sig")
-        good = marker.read_text()
-        try:
-            marker.write_text("stale:0:0;stale:0:0")
-            assert not _ck_layout_available(spark, sf_dir, buckets=4)
-            assert not spark.catalog.tableExists(o_tbl)
-        finally:
-            marker.write_text(good)
-
-        # ---- valid disk layout: DDL-only re-attach ----
-        assert _ck_layout_available(spark, sf_dir, buckets=4)
-        assert spark.catalog.tableExists(o_tbl)
-        assert spark.catalog.tableExists(c_tbl)
-
-        anti = custkey_anti_plan(spark, sf_dir, buckets=4)
-        plan = anti._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan[:2000]
-        assert "Exchange hashpartitioning" not in plan, plan[:3000]
-        got_inner = sorted(
-            map(tuple, custkey_inner_plan(spark, sf_dir, buckets=4).collect())
-        )
-        # exact-cents sums: re-attached SMJ == ad-hoc, bit-for-bit
-        assert got_inner == adhoc_inner and got_inner
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {o_tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {c_tbl}")
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_bucketed_layout_name_collision_probes_false(spark, sf_dir, tmp_path):
-    """r13 ADVICE #1: names() sanitizes every non-identifier char, so
-    DISTINCT corpus dirs differing only in punctuation (c-v2 vs c.v2)
-    share table NAMES while their scratch bases stay distinct. When the
-    catalog table points at corpus A's location, corpus B's probe must
-    NOT dispatch to it: available(B) verifies the attached LOCATION,
-    not just tableExists by name — else B silently serves A's rows.
-    Pinned by building A's layout, manufacturing B's disk-valid layout
-    files WITHOUT touching the catalog (the cross-session-persistence
-    scenario), and asserting available(B) is False while available(A)
-    stays True."""
-    import shutil
-    from pathlib import Path
-
-    from atd_dockless_processing_spark.operators.joins import _CK_LAYOUT
-
-    corpus_a = tmp_path / "c-v2"
-    corpus_b = tmp_path / "c.v2"
-    for corpus in (corpus_a, corpus_b):
-        corpus.mkdir()
-        for t in ("orders", "customer"):
-            shutil.copy(f"{sf_dir}/{t}.parquet", corpus / f"{t}.parquet")
-
-    names_a, base_a = _CK_LAYOUT.names(str(corpus_a), 4)
-    names_b, base_b = _CK_LAYOUT.names(str(corpus_b), 4)
-    assert names_a == names_b and base_a != base_b  # the collision
-
-    try:
-        _CK_LAYOUT.ensure(spark, str(corpus_a), 4)
-        assert _CK_LAYOUT.available(spark, str(corpus_a), 4)
-        # manufacture B's disk-valid layout (files + marker) without
-        # touching the catalog — what a prior session's build leaves
-        shutil.copytree(base_a, base_b, dirs_exist_ok=True)
-        Path(base_b, f".{names_b[0]}.src_sig").write_text(
-            _CK_LAYOUT.src_sig(str(corpus_b))
-        )
-        assert _CK_LAYOUT._disk_valid(str(corpus_b), 4)
-        # the catalog's table points at A — B must decline to dispatch
-        assert not _CK_LAYOUT.available(spark, str(corpus_b), 4)
-        # and A keeps its layout
-        assert _CK_LAYOUT.available(spark, str(corpus_a), 4)
-    finally:
-        for n in names_a:
-            spark.sql(f"DROP TABLE IF EXISTS `{n}`")
-        shutil.rmtree(base_a, ignore_errors=True)
-        shutil.rmtree(base_b, ignore_errors=True)
-
-
 @settings(max_examples=500, deadline=None)
 @given(cents=st.integers(min_value=0, max_value=10**13))
 def test_exact_cents_lift_recovers_integer(cents: int):
@@ -4532,10 +4168,10 @@ def test_exact_e4_lift_recovers_product(price_c: int, disc_c: int):
 def test_exact_unit_sum_plan_order_independent(spark, sf_dir, duck):
     """The point of exact_unit_sum: the SAME logical sum computed
     under different physical partitionings/orderings must be
-    BIT-identical (a plain double sum is not — that is why the
-    layout-dispatched keys needed the lift once re-attach made SMJ
-    plans live during hash-gated sweeps). Also cross-engine: DuckDB's
-    lifted spelling must produce the identical double."""
+    BIT-identical (a plain double sum is not, so a join-strategy or
+    partitioning change would move the hashed result). Also
+    cross-engine: DuckDB's lifted spelling must produce the identical
+    double."""
     from atd_dockless_processing_spark.functions.exact import exact_unit_sum
     from atd_dockless_processing_spark.tables import load
 
@@ -4558,66 +4194,6 @@ def test_exact_unit_sum_plan_order_independent(spark, sf_dir, duck):
         " / 100.0, 4) FROM orders"
     ).fetchone()[0]
     assert vals == {duck_val}
-
-
-def test_build_layouts_ops_script(spark, sf_dir, tmp_path):
-    """scripts/build_layouts.py is the one ops step per corpus
-    (LAYOUTS.md) — smoke it end-to-end against a COPY of the corpus
-    so the real sweep-dir layouts are untouched: all three layouts
-    must come up LIVE, exit code 0, and a second run must be a cheap
-    idempotent re-verify (no rebuild: the bucketed data files keep
-    their mtimes). Cleans up its scratch layout dirs in finally (a
-    leaked layout re-attaches and flips later 'auto' plans — the r13
-    lesson)."""
-    import shutil
-    import subprocess
-    import sys as _sys
-    from pathlib import Path
-
-    from atd_dockless_processing_spark.operators.events import (
-        _tumbling_us_paths,
-    )
-    from atd_dockless_processing_spark.operators.joins import (
-        _CK_BUCKETS,
-        _CK_LAYOUT,
-        _Q5_BUCKETS,
-        _Q5_LAYOUT,
-    )
-
-    corpus = tmp_path / "ops_corpus"
-    corpus.mkdir()
-    for t in ("lineitem", "orders", "customer", "events"):
-        shutil.copy(f"{sf_dir}/{t}.parquet", corpus / f"{t}.parquet")
-
-    repo = Path(__file__).resolve().parent.parent
-    scratches = [
-        Path(_CK_LAYOUT.names(str(corpus), _CK_BUCKETS)[1]),
-        Path(_Q5_LAYOUT.names(str(corpus), _Q5_BUCKETS)[1]),
-        Path(_tumbling_us_paths(str(corpus))[0]).parent,
-    ]
-    try:
-        for attempt in ("build", "reverify"):
-            r = subprocess.run(
-                [_sys.executable, "scripts/build_layouts.py", str(corpus)],
-                capture_output=True, text=True, cwd=str(repo),
-                timeout=600, check=False,
-            )
-            assert r.returncode == 0, (attempt, r.stdout[-2000:], r.stderr[-2000:])
-            assert r.stdout.count("LIVE") == 3, (attempt, r.stdout[-2000:])
-            assert "DECLINED" not in r.stdout, (attempt, r.stdout[-2000:])
-        # mtime-stable data files prove the second run re-verified
-        # instead of rebuilding (markers match, ensure() skips)
-        assert _CK_LAYOUT._disk_valid(str(corpus), _CK_BUCKETS)
-        assert _Q5_LAYOUT._disk_valid(str(corpus), _Q5_BUCKETS)
-    finally:
-        names, _ = _CK_LAYOUT.names(str(corpus), _CK_BUCKETS)
-        names2, _ = _Q5_LAYOUT.names(str(corpus), _Q5_BUCKETS)
-        for n in (*names, *names2):
-            # names() sanitizes to identifier chars since r13, so the
-            # backquotes are belt-and-braces only
-            spark.sql(f"DROP TABLE IF EXISTS `{n}`")
-        for d in scratches:
-            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_map_ops_json_fast_twin_value_equality(spark, sf_dir):

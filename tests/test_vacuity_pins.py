@@ -682,13 +682,16 @@ def test_corr_cov_units_form_matches_decimal_twin(spark, sf_dir, tmp_path):
     provably load-bearing), mixed with minimum-domain rows (qty 1,
     price 0.01 — lift exactness at the small end) so the group keeps
     nonzero variance. Oracle-hash parity on the synthesized corpus
-    guards the lift + reconstruction cross-engine."""
+    guards the lift + reconstruction cross-engine. The long-unit form
+    is called by name, so the pin compares it with the twin whichever
+    form the key's row-count dispatch picks."""
     from atd_dockless_processing_spark.operators.pipeline_r4 import (
         _corr_cov_decimal_twin,
+        _corr_cov_long_units,
     )
 
     reg = sorted(
-        map(tuple, QUERIES["agg_corr_cov"](spark, str(sf_dir)).collect())
+        map(tuple, _corr_cov_long_units(spark, str(sf_dir)).collect())
     )
     twin = sorted(
         map(tuple, _corr_cov_decimal_twin(spark, str(sf_dir)).collect())
@@ -710,7 +713,7 @@ def test_corr_cov_units_form_matches_decimal_twin(spark, sf_dir, tmp_path):
 
     rows = _compare(spark, corpus, "agg_corr_cov")  # oracle-hash parity
     reg_syn = sorted(
-        map(tuple, QUERIES["agg_corr_cov"](spark, str(corpus)).collect())
+        map(tuple, _corr_cov_long_units(spark, str(corpus)).collect())
     )
     twin_syn = sorted(
         map(tuple, _corr_cov_decimal_twin(spark, str(corpus)).collect())
@@ -719,6 +722,33 @@ def test_corr_cov_units_form_matches_decimal_twin(spark, sf_dir, tmp_path):
     z = [r for r in reg_syn if r[0] == "Z"]
     assert len(z) == 1 and z[0][1] == 13 and z[0][2] is not None, z
     assert len(rows) == len(reg_syn) == 4  # 3 stock flags + Z
+
+
+@pytest.mark.parametrize("nrows", ["bound", None], ids=["at-bound", "unknown"])
+def test_corr_cov_dispatches_to_decimal_twin_past_row_bound(
+    spark, sf_dir, monkeypatch, nrows
+):
+    """agg_corr_cov picks its form from the lineitem footer row count:
+    the long-unit sums are exact only below ``_CORR_COV_UNIT_MAX_ROWS``
+    rows per group, so a count at that bound, or no count at all, must
+    plan the decimal twin. The long-unit plan is recognised by its
+    2^32 hi/lo split; the real corpus must plan it, so the check
+    cannot pass on a twin-only plan string."""
+    from atd_dockless_processing_spark import tables
+    from atd_dockless_processing_spark.operators.pipeline_r4 import (
+        _CORR_COV_UNIT_MAX_ROWS,
+    )
+
+    def plan() -> str:
+        df = QUERIES["agg_corr_cov"](spark, str(sf_dir))
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "4294967296" in plan()
+    count = _CORR_COV_UNIT_MAX_ROWS if nrows == "bound" else None
+    monkeypatch.setattr(tables, "parquet_nrows", lambda _dir, _name: count)
+    twin = plan()
+    assert "4294967296" not in twin, twin[:2000]
+    assert "decimal(18,4)" in twin, twin[:2000]
 
 
 def test_repetition_sorted_form_matches_quadratic_twin(spark, sf_dir, tmp_path):
