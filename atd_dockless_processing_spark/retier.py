@@ -99,6 +99,9 @@ EVIDENCE_INVALIDATED: dict[str, int] = {
     # construction, but the registered plan changed again, so its r14
     # evidence (none) stays invalid through r15.
     "agg_corr_cov": 15,
+    # r17: the 30-minute gap is compared in exact microseconds instead
+    # of whole seconds (a 1800.4 s gap no longer merges two sessions)
+    "evt_sessionize_lag": 17,
 }
 
 

@@ -25,12 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.pipeline_r5 import (
-    _HLL_EST,
-    _HLL_RHO,
-    _HLL_TERM_DUCK,
-    _HLL_TERM_SPARK,
-)
+from ..operators.aggregates import _HLL_EST, _HLL_RHO, _HLL_TERM_DUCK, _HLL_TERM_SPARK
 from ..registry import query
 from ..tables import events_ts_to_timestamp, load, scratch_dir
 
@@ -415,7 +410,7 @@ def stm_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # NB: the oracle's "> 1800" gap rule must stay in lockstep with Spark's
 # merge-at-exactly-gap session semantics; the same rule appears in the
-# sessionization oracles in events.py, stream_queries.py and pipeline_r3.py —
+# sessionization oracles in events.py and stream_queries.py —
 # change all or none (oracle SQL is newline-collapsed, so no -- comments).
 @query(
     "stm_stateful_session",
@@ -656,7 +651,7 @@ def stm_sliding_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # NB: the oracle's "> 1800" gap rule must stay in lockstep with Spark's
 # merge-at-exactly-gap session semantics; the same rule appears in the
-# sessionization oracles in events.py, stream_queries.py and pipeline_r3.py —
+# sessionization oracles in events.py and stream_queries.py —
 # change all or none (oracle SQL is newline-collapsed, so no -- comments).
 @query(
     "stm_session_window",
@@ -2055,3 +2050,166 @@ def stm_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _run_to_memory(deduped, name, "complete")
     return spark.table(name)
+
+
+# ---------------------------------------------------------------------------
+# stm_cdc_stream_apply — CDC merge into a snapshot across micro-batches
+# ---------------------------------------------------------------------------
+
+_CDC_ORACLE = """
+    WITH log AS (
+      SELECT o_orderkey AS k, 1 AS seq, 'I' AS op,
+             o_orderstatus AS status, o_totalprice AS price
+      FROM orders
+      UNION ALL
+      SELECT o_orderkey, 2, 'U', 'U', o_totalprice + 100.0
+      FROM orders WHERE o_orderkey % 3 = 0
+      UNION ALL
+      SELECT o_orderkey, 3, 'D', NULL, NULL
+      FROM orders WHERE o_orderkey % 5 = 0
+    ), last AS (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY k ORDER BY seq DESC) AS rn
+      FROM log
+    ), snap AS (
+      SELECT k, status, price FROM last WHERE rn = 1 AND op <> 'D'
+    )
+    SELECT status,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           ROUND(CAST(SUM(CAST(price AS DECIMAL(18,4))) AS DOUBLE), 4)
+             AS sum_price
+    FROM snap GROUP BY status
+"""
+
+
+def _stage_cdc_log(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the deterministic I/U/D log (the snk_cdc_apply
+    derivation) as THREE parquet files, one per seq, so
+    maxFilesPerTrigger=1 drains them as three micro-batches. The
+    merge itself is declared arrival-order-ROBUST (last-writer-wins
+    compares seq numbers, not batch order), so file ordering is a
+    realism choice, not a correctness dependency."""
+    from ..tables import stage_scratch
+
+    def build(indir: str) -> None:
+        orders = load(spark, sf_dir, "orders")
+        ins = orders.select(
+            F.col("o_orderkey").alias("k"),
+            F.lit(1).alias("seq"),
+            F.lit("I").alias("op"),
+            F.col("o_orderstatus").alias("status"),
+            F.col("o_totalprice").alias("price"),
+        )
+        upd = orders.where(F.col("o_orderkey") % 3 == 0).select(
+            F.col("o_orderkey").alias("k"),
+            F.lit(2).alias("seq"),
+            F.lit("U").alias("op"),
+            F.lit("U").alias("status"),
+            (F.col("o_totalprice") + 100.0).alias("price"),
+        )
+        dele = orders.where(F.col("o_orderkey") % 5 == 0).select(
+            F.col("o_orderkey").alias("k"),
+            F.lit(3).alias("seq"),
+            F.lit("D").alias("op"),
+            F.lit(None).cast("string").alias("status"),
+            F.lit(None).cast("double").alias("price"),
+        )
+        import os
+
+        os.makedirs(indir, exist_ok=True)
+        for i, part in enumerate((ins, upd, dele), start=1):
+            part.coalesce(1).write.mode("overwrite").parquet(
+                f"{indir}/seq{i}.parquet"
+            )
+            # flatten: the file source lists files recursively only
+            # with a glob; move the part file up as seq{i}.parquet
+        # rewrite as flat files the stream dir can list
+        flat = [p for p in __import__("glob").glob(f"{indir}/seq*.parquet/part-*.parquet")]
+        for i, p in enumerate(sorted(flat)):
+            shutil.move(p, f"{indir}/cdc_{i}.parquet")
+        for d in __import__("glob").glob(f"{indir}/seq*.parquet"):
+            shutil.rmtree(d, ignore_errors=True)
+
+    return stage_scratch("stm_cdc_log", sf_dir, "orders", build)
+
+
+@query("stm_cdc_stream_apply", oracle=_CDC_ORACLE)
+def stm_cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """STREAMING CDC application — the change feed folded into a
+    materialized snapshot ACROSS micro-batches ([P high]: this is
+    what a Debezium/kafka consumer maintaining a queryable mirror
+    does continuously; the batch twin snk_cdc_apply folds a complete
+    log, this one must keep the snapshot correct after EVERY
+    incremental batch). Each foreachBatch merge unions the incoming
+    batch with the current snapshot, keeps last-writer-wins by SEQ
+    NUMBER per key (arrival-order-robust by construction — a
+    re-ordered or replayed feed folds identically), and retains
+    delete TOMBSTONES in the snapshot so a late lower-seq update can
+    never resurrect a deleted key; the published read filters
+    tombstones out. The snapshot swap is write-new-then-rename
+    (atomic publish; readers never see a half-written merge).
+
+    Oracle = the batch fold of the full log (snk_cdc_apply's) — a
+    lost update, surviving delete, resurrection, or double-applied
+    batch flips the hash. At 100 TB the same foreachBatch body runs
+    MERGE INTO on a lakehouse table; the tombstone and seq
+    disciplines are identical. State per merge is the snapshot
+    itself (the operator IS incremental materialization)."""
+    stage = _stage_cdc_log(spark, sf_dir)
+    base = scratch_dir(
+        "stm_cdc_snap", sf_dir.strip("/").replace("/", "_"), uuid.uuid4().hex[:8]
+    )
+    snap_dir = f"{base}/snap"
+    schema = "k long, seq int, op string, status string, price double"
+
+    def merge(bdf: DataFrame, _bid: int) -> None:
+        sp = bdf.sparkSession
+        import os
+
+        if os.path.exists(snap_dir):
+            cur = sp.read.parquet(snap_dir)
+            allr = cur.unionByName(bdf)
+        else:
+            allr = bdf
+        w = Window.partitionBy("k").orderBy(F.col("seq").desc())
+        merged = (
+            allr.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .drop("rn")
+        )
+        tmp = f"{base}/tmp_{_bid}"
+        merged.write.mode("overwrite").parquet(tmp)
+        old = f"{base}/old_{_bid}"
+        if os.path.exists(snap_dir):
+            shutil.move(snap_dir, old)
+        shutil.move(tmp, snap_dir)
+        shutil.rmtree(old, ignore_errors=True)
+
+    ckpt = f"{base}/ckpt"
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+        .writeStream.foreachBatch(merge)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    out = (
+        spark.read.parquet(snap_dir)
+        .where(F.col("op") != "D")
+        .groupBy("status")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.round(
+                F.sum(F.col("price").cast("decimal(18,4)")).cast("double"), 4
+            ).alias("sum_price"),
+        )
+    )
+    # materialize before the scratch snapshot is abandoned to later
+    # runs' cleanup; the frame returned must not depend on run-id dirs
+    pdf = out.toPandas()
+    shutil.rmtree(base, ignore_errors=True)
+    return spark.createDataFrame(
+        pdf, schema="status string, n_rows long, sum_price double"
+    )

@@ -432,10 +432,11 @@ def main() -> None:
         return out
 
     zero_work_s = _zero_work_s()
+    # a failed side probe is recorded as its error, never as an empty map
     try:
-        compute_ms = _compute_ms()
-    except Exception:
-        compute_ms = {}
+        compute = {"compute_ms": _compute_ms()}
+    except Exception as e:
+        compute = {"compute_ms_error": f"{type(e).__name__}: {e}"}
     # retry-reason accounting for the discarded epochs (r14 review
     # finding: lumping ratio-retries into "noisy" misattributed them)
     discarded = epochs.copy()
@@ -487,7 +488,7 @@ def main() -> None:
                 "cpus": spark.sparkContext.defaultParallelism,
                 "epochs": epoch_history,
                 "zero_work_query_s": zero_work_s,
-                "compute_ms": compute_ms,
+                **compute,
                 # clean-bracket epochs re-rolled because their paired
                 # ratio exceeded the 2.0 gate (distinct from host
                 # noise — the r14 retry rule)
@@ -502,7 +503,8 @@ def main() -> None:
                     " each epoch (bracket max recorded), epoch re-run (<=3)"
                     " while the pair drifts >1.3x off BASELINE OR the"
                     " paired ratio exceeds 2.0 (sf0.1 only); recorded"
-                    " epoch = clean bracket with best paired ratio;"
+                    " epoch = quietest clean bracket (quietest bracket if"
+                    " none is clean), chosen blind to its paired ratio;"
                     " cpus/epochs/zero_work_query_s/compute_ms are"
                     " r15 legibility additions measured OUTSIDE the"
                     " timed epochs (timing method unchanged)"

@@ -44,6 +44,9 @@ def test_bench_emits_contract_json():
     # applies — at any other sf it must be None, mirroring pair_drift
     assert doc["pair_noisy"] is None
     assert doc["noisy_epochs_discarded"] == 0
+    # the side probe records either one compute time per query or the
+    # error that stopped it — never a silently empty map
+    assert len(doc.get("compute_ms", {})) == 12 or doc.get("compute_ms_error")
 
 
 def test_key_order_matches_registry():

@@ -23,6 +23,7 @@ sys.path.insert(0, str(REPO))
 
 from atd_dockless_processing_spark import ORACLES, QUERIES  # noqa: E402
 from atd_dockless_processing_spark.retier import (  # noqa: E402
+    EVIDENCE_INVALIDATED,
     is_green,
     latest_evidence,
     retier,
@@ -58,7 +59,12 @@ def test_retier_pure_function_with_synthetic_next_round():
     invariants — without touching disk."""
     evidence = latest_evidence(REPO)
     assert evidence, "no CORRECTNESS files in repo"
-    next_round = max(rnd for rnd, _ in evidence.values()) + 1
+    # the next drop is earned by this tree, so it is no older than the
+    # newest round in which a registered plan changed
+    next_round = max(
+        max(rnd for rnd, _ in evidence.values()) + 1,
+        max(EVIDENCE_INVALIDATED.values()),
+    )
     base = retier(sorted(QUERIES), QUERIES, ORACLES, evidence)
     swept = base[:50]
     synth = dict(evidence)

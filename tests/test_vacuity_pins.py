@@ -417,7 +417,7 @@ def test_pk_packed_lineitem_key_matches_composite_twin(
     numbers sit at both range edges (1 and 7), and (k0+5, 7) appears
     twice — a genuine composite dup the packed key must still count
     exactly once. Oracle-hash-equal on the synthesized corpus too."""
-    from atd_dockless_processing_spark.operators.pipeline_r6c import (
+    from atd_dockless_processing_spark.operators.quality import (
         _pk_uniqueness_composite_twin,
     )
 
@@ -480,9 +480,7 @@ def test_od_matrix_int_components_match_stringkey_twin(
     exactly one row with n_trips == 6. Oracle-hash parity on the
     synthesized corpus guards the Spark-vs-DuckDB NULL-concat
     divergence the COALESCE exists for."""
-    from atd_dockless_processing_spark.operators.pipeline_r5 import (
-        _od_matrix_stringkey_twin,
-    )
+    from atd_dockless_processing_spark.operators.geo import _od_matrix_stringkey_twin
 
     reg = sorted(
         map(tuple, QUERIES["geo_od_matrix"](spark, str(sf_dir)).collect())
@@ -561,9 +559,7 @@ def test_gini_hist_form_matches_rank_twin(spark, sf_dir, tmp_path):
     single-row class (n=1 → gini 0, the degenerate tail). Oracle-
     hash parity on the synthesized corpus guards the lift + DECIMAL
     accumulation cross-engine."""
-    from atd_dockless_processing_spark.operators.pipeline_r6e import (
-        _gini_rank_twin,
-    )
+    from atd_dockless_processing_spark.operators.aggregates import _gini_rank_twin
 
     reg = sorted(
         map(tuple, QUERIES["agg_gini"](spark, str(sf_dir)).collect())
@@ -614,9 +610,7 @@ def test_rouge_merge_form_matches_quadratic_twin(spark, sf_dir, tmp_path):
     via the nullif guard), and a disjoint pair (ov 0). Oracle-hash
     parity on the synthesized corpus guards the sorted-merge vs
     DuckDB clipped-list semantics."""
-    from atd_dockless_processing_spark.operators.pipeline_r6f import (
-        _rouge_quadratic_twin,
-    )
+    from atd_dockless_processing_spark.operators.llm import _rouge_quadratic_twin
 
     reg = sorted(
         map(tuple, QUERIES["llm_rouge_overlap"](spark, str(sf_dir)).collect())
@@ -685,7 +679,7 @@ def test_corr_cov_units_form_matches_decimal_twin(spark, sf_dir, tmp_path):
     guards the lift + reconstruction cross-engine. The long-unit form
     is called by name, so the pin compares it with the twin whichever
     form the key's row-count dispatch picks."""
-    from atd_dockless_processing_spark.operators.pipeline_r4 import (
+    from atd_dockless_processing_spark.operators.aggregates import (
         _corr_cov_decimal_twin,
         _corr_cov_long_units,
     )
@@ -735,7 +729,7 @@ def test_corr_cov_dispatches_to_decimal_twin_past_row_bound(
     2^32 hi/lo split; the real corpus must plan it, so the check
     cannot pass on a twin-only plan string."""
     from atd_dockless_processing_spark import tables
-    from atd_dockless_processing_spark.operators.pipeline_r4 import (
+    from atd_dockless_processing_spark.operators.aggregates import (
         _CORR_COV_UNIT_MAX_ROWS,
     )
 
@@ -767,9 +761,7 @@ def test_repetition_sorted_form_matches_quadratic_twin(spark, sf_dir, tmp_path):
     NULL/NULL cross-engine before pinning). Oracle-hash parity on the
     synthesized corpus guards the sorted-walk vs DuckDB's quadratic
     list lambdas."""
-    from atd_dockless_processing_spark.operators.pipeline_r2 import (
-        _repetition_quadratic_twin,
-    )
+    from atd_dockless_processing_spark.operators.text import _repetition_quadratic_twin
 
     reg = sorted(
         map(tuple, QUERIES["txt_repetition_filter"](spark, str(sf_dir)).collect())
@@ -812,3 +804,62 @@ def test_repetition_sorted_form_matches_quadratic_twin(spark, sf_dir, tmp_path):
     # (top2 0.4) all exceed a threshold
     assert len(xx) == 1 and xx[0][1] == 4 and xx[0][2] == 3, xx
     assert any("xx" in str(r) for r in rows)  # canonicalized row strings
+
+
+@pytest.mark.parametrize(
+    "helper",
+    [
+        "atd_dockless_processing_spark.operators.llm:_bigrams_from",
+        "atd_dockless_processing_spark.operators.text:_repetition_g2_from",
+    ],
+    ids=lambda h: h.split(":")[1],
+)
+def test_hoisted_gram_builders_reject_expressions(helper):
+    """The hoisted gram builders splice ``tok_col`` into a lambda body,
+    so an expression there (``split(text, ' ')``) would be re-run per
+    element — the quadratic form the split hoist removed. Only a
+    projected column name is accepted."""
+    import importlib
+
+    mod, name = helper.split(":")
+    build = getattr(importlib.import_module(mod), name)
+    build("tok")  # a plain column name builds
+    with pytest.raises(ValueError, match="projected column"):
+        build("split(text, ' ')")
+
+
+def test_sessionize_lag_compares_exact_gap(spark, sf_dir, tmp_path):
+    """evt_sessionize_lag must split on a gap > 30 min to the
+    microsecond, as the oracle's interval compare does. One new user
+    with gaps of 1800.4 s (whole seconds read 1800: the old
+    whole-second compare merged it), 1800.6 s (whole seconds read
+    1801) and exactly 1800 s (no split on either engine): 3 sessions
+    over 4 events."""
+    corpus = tmp_path / "sess_gap_corpus"
+    corpus.mkdir()
+    ev = pd.read_parquet(f"{sf_dir}/events.parquet")
+    u = int(ev["user_id"].max()) + 1
+    e0 = int(ev["event_id"].max()) + 1
+    t0 = pd.Timestamp("2024-06-01 00:00:00")
+    ts = [t0]
+    for gap_ms in (1_800_400, 1_800_600, 1_800_000):
+        ts.append(ts[-1] + pd.Timedelta(milliseconds=gap_ms))
+    extra = pd.DataFrame(
+        {
+            "event_id": range(e0, e0 + 4),
+            "ts": ts,
+            "user_id": [u] * 4,
+            "event_type": ["click"] * 4,
+            "value": [1.0] * 4,
+            "props": ["{}"] * 4,
+        }
+    )
+    _append_like(f"{sf_dir}/events.parquet", corpus / "events.parquet", extra)
+
+    _compare(spark, corpus, "evt_sessionize_lag")
+    (row,) = (
+        QUERIES["evt_sessionize_lag"](spark, str(corpus))
+        .where(f"user_id = {u}")
+        .collect()
+    )
+    assert (row["n_sessions"], row["n_events"]) == (3, 4)
